@@ -1,21 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional arg: comma-separated query names for fast iteration (the
     // driver passes none and benches everything)
     val only = args.headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-bench")
     // warm the session (parquet footers, codegen, JIT) so per-query numbers
     // reflect steady-state cost, then time each query with a noop write —
     // count() would let column pruning skip projection-only query bodies.
@@ -83,9 +73,12 @@ object Bench {
     def r3(v: Double): String = f"$v%.3f"
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
+    // `value` sums the keys that ran; `n_failed` counts those that did
+    // not, so a key that breaks cannot pass for a faster board
     val total = results.map(_._2).filter(_ >= 0).sum
+    val nFailed = results.count(_._2 < 0)
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","n_failed":$nFailed}"""
     spark.stop()
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
       (line + "\n").getBytes("UTF-8"))

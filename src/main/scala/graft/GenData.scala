@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-data generator matching the driver test tables'
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
 object GenData {
 
   /** Uniform [0,1) from any column set, decorrelated by `salt`. */
-  private def u01(salt: Int, cols: org.apache.spark.sql.Column*) =
+  private[graft] def u01(salt: Int, cols: org.apache.spark.sql.Column*) =
     (pmod(xxhash64(cols :+ lit(salt): _*), lit(1L << 40)).cast("double")
       / lit((1L << 40).toDouble))
 
@@ -50,15 +50,7 @@ object GenData {
         s"unknown tables: ${bad.toSeq.sorted.mkString(",")} " +
           s"(known: ${known.toSeq.sorted.mkString(",")})")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-gendata")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-gendata")
     import spark.implicits._
 
     def write(df: DataFrame, name: String): Unit =

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{AsOf, ChangeDetect, Intervals, Visits}
 import graft.metrics._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end example on the reference's OWN demo dataset — the
@@ -31,14 +31,7 @@ object Quickstart {
   def main(args: Array[String]): Unit = {
     val seedDir = args.headOption.getOrElse("/root/reference/demo/seeds")
     val outDir = args.drop(1).headOption.getOrElse("target/quickstart")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-quickstart")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-quickstart")
 
     def save(df: DataFrame, name: String): Unit = {
       df.write.mode("overwrite").parquet(s"$outDir/$name")

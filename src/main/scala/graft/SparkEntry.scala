@@ -2604,8 +2604,8 @@ object SparkEntry {
     // the NATIVE MeterFrames kernel: one scan of the payload bytes emits
     // the flattened (grp, m, v) rows — one explode replaces parse → nested
     // cast → two explodes. The generic routes (from_json / parse_json →
-    // VARIANT, both measured 1.2–1.9 s/round at sf0.1 in
-    // `runMain graft.Profile <sf> variantab`, which still exercises them)
+    // VARIANT, both measured 1.2–1.9 s/round at sf0.1 in the r4
+    // interleaved A/B against this kernel)
     // build a JSON tree per row in an interpreted projection; the kernel
     // stays inside whole-stage codegen and its Double.parseDouble is the
     // same correctly-rounded conversion, so the hash is unchanged.
@@ -4143,7 +4143,7 @@ object SparkEntry {
       // grams shuffle as 8-byte xxhash64 longs, not ~30-byte strings (the
       // Dedup posting discipline): per-doc counts are key-identity-
       // invariant, so the oracle's string-grouped counts match exactly.
-      // MEASURED DECISION (r15, Profile `repab` interleaved A/B at sf10):
+      // MEASURED DECISION (r15 interleaved A/B at sf10, SURVEY §6):
       // fusing the three families into ONE explode with n in the grouping
       // key — the r14 verdict's suggestion, tried as both a struct key and
       // a packed-long key — is 2× SLOWER (split 7.7-13.0 s vs fused

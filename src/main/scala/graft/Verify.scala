@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,39 +7,26 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional third arg: comma-separated query names for fast iteration
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,2,2048] runs the whole gate across
-    // REAL executor JVMs (closure serialization, broadcast transport, kryo —
-    // everything single-JVM local mode hides); SPARK_GRAFT_JARS must then
-    // point at the packaged application jar for the executor classpath
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("SPARK_GRAFT_JARS")
-      .fold(builder0)(jars => builder0.config("spark.jars", jars))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_JARS: the packaged application jar, for executor JVMs
+    // under a SPARK_GRAFT_MASTER cluster (see GraftSession)
+    val spark = GraftSession.start("graft-verify",
+      sys.env.get("SPARK_GRAFT_JARS").map("spark.jars" -> _).toSeq: _*)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+      .flatMap { case (name, fn) =>
       // repartition(1), NOT coalesce(1): coalesce propagates up to the last
       // shuffle boundary, so a query whose final operator is a join/filter
       // (no aggregate) would run its whole heavy stage in ONE task
       // (measured 204 s vs 8.5 s for q_containment at sf2); repartition
       // inserts an exchange and keeps upstream parallelism. The gate sorts
       // rows before hashing, so the changed row order is irrelevant.
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try { fn(spark, sfDir).repartition(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name"); None }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+        Some(name) }
+    }.sorted
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -57,5 +43,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // a failed key must fail the run, not just scroll past in the log
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -63,7 +63,7 @@ object Similarity {
     * The linear family is a lattice: stepping p adds a CONSTANT vector
     * mod 1, so consecutive planes are strongly correlated and the sign
     * bits of a b-bit band carry far fewer than b bits of entropy. Measured
-    * at 200k vectors / 12-bit bands (sf10, `Profile <dir> bands`): the
+    * at 200k vectors / 12-bit bands (sf10 occupancy run, SURVEY §6): the
     * linear family leaves 40-60 % of buckets empty with Σ|bucket|² of
     * 250-435M per band (25-44× the uniform ideal — the banded-candidate
     * linearity claim collapses); the quadratic map lands at 13.3-14.5M per

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * depth 2 every name paid ≈len²/2 interpreted substr→concat chains plus
   * an `array_distinct` over ~300 strings — measured as the dominant stage
   * of q_fuzzy_match2, ahead of the block join AND the thresholded-
-  * levenshtein verify; Profile `fuzzygate`, r18).
+  * levenshtein verify; OPTIMIZATION_r18.md, VERDICT item 7).
   *
   * Output: the xxhash64 (seed 42 — Spark's `xxhash64(string)`) of every
   * DISTINCT string obtainable by deleting up to `depth` characters
@@ -31,6 +31,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * so the match output is row-identical on every input
   * (EntityResolutionSpec pins hash-set identity vs the HOF form and
   * row-identity of the full matcher).
+  *
+  * Hash-set identity with the HOF form holds for valid UTF-8 only: the
+  * kernel finds codepoint starts as non-continuation bytes, while
+  * `substr` steps by each lead byte's declared length, so on malformed
+  * byte sequences the two can cut different variants. Matching stays
+  * consistent there, since both join sides use this kernel and the exact
+  * levenshtein verify decides membership.
+  *
+  * A name may yield at most [[EntityKernel.MaxVariants]] variants; a
+  * longer one fails with an `IllegalArgumentException` naming the limit.
   */
 case class DeletionKeyHashes(child: Expression, depth: Int)
     extends UnaryExpression {
@@ -63,6 +73,11 @@ case class DeletionKeyHashes(child: Expression, depth: Int)
 object EntityKernel {
   private final val Seed = 42L
 
+  /** Most variants one name may produce (1 + n + n(n−1)/2 at depth 2):
+    * 2²⁰, an 8 MB hash array and ≈1.5 GB of variant bytes hashed — names
+    * up to 1,447 codepoints at depth 2. */
+  final val MaxVariants: Long = 1L << 20
+
   /** Sorted-unique xxhash64 keys of the ≤`depth`-deletion neighborhood of
     * `name`. Called from generated code; must stay a plain static-shaped
     * method. One scratch buffer serves every variant of a row; deletion
@@ -80,9 +95,15 @@ object EntityKernel {
       i += 1
     }
     offs(nChars) = len
-    val maxVariants =
-      1 + nChars + (if (depth == 2) nChars * (nChars - 1) / 2 else 0)
-    val hashes = new Array[Long](maxVariants)
+    // Long: n(n−1) overflows Int from 46,341 codepoints
+    val n = nChars.toLong
+    val maxVariants = 1L + n + (if (depth == 2) n * (n - 1) / 2 else 0L)
+    if (maxVariants > MaxVariants)
+      throw new IllegalArgumentException(
+        s"deletion_key_hashes: a $nChars-codepoint name has $maxVariants " +
+          s"depth-$depth variants, over the limit of $MaxVariants " +
+          "(EntityKernel.MaxVariants)")
+    val hashes = new Array[Long](maxVariants.toInt)
     var m = 0
     hashes(m) = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, len, Seed)
     m += 1

@@ -7,14 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * sessions are expensive; specs run sequentially in sbt's forked JVM).
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
+  // pinned to local[4] whatever the host or SPARK_GRAFT_* say, so specs
+  // see the same partitioning everywhere
+  lazy val spark: SparkSession = GraftSession.builder("graft-test")
     .master("local[4]")
-    .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
 

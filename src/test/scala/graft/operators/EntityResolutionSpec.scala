@@ -252,4 +252,16 @@ class EntityResolutionSpec extends SparkSpec {
       .select(EntityExpressions.deletionKeyHashes($"n", 2)).collect()(0)
     assert(nullOut.isNullAt(0))
   }
+
+  test("deletion_key_hashes rejects a name past its variant limit before allocating") {
+    import graft.plans.EntityKernel
+    import org.apache.spark.unsafe.types.UTF8String
+    // 50,000 codepoints: past the limit, and n(n-1) overflows Int there, so
+    // the variant count must be Long for the check to see it
+    val long = UTF8String.fromString("ab" * 25000)
+    val e = intercept[IllegalArgumentException](EntityKernel.deletionKeyHashes(long, 2))
+    assert(e.getMessage.contains(s"limit of ${EntityKernel.MaxVariants}"), e.getMessage)
+    // the same name is within the limit at depth 1 (1 + n variants)
+    assert(EntityKernel.deletionKeyHashes(long, 1).numElements() > 0)
+  }
 }

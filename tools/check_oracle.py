@@ -2,7 +2,9 @@
 """Local replica of the driver's correctness gate: run each oracle SQL in
 DuckDB against the test parquet tables and compare with the Spark result
 parquet dumped by graft.Verify. Columns sorted by name, rows sorted, exact
-value compare (floats reported with max abs diff on mismatch).
+value compare (floats reported with max abs diff on mismatch). An oracle
+key with no result dir counts as a MISSING fail; the exit status is 1 when
+anything failed.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
@@ -43,6 +45,10 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_pass = n_fail = 0
+    for name in sorted(oracles):
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"{name:24s} MISSING no result dir")
+            n_fail += 1
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
@@ -91,6 +97,7 @@ def main(sf_dir, out_dir):
         else:
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
+    return n_fail
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(1 if main(sys.argv[1], sys.argv[2]) else 0)
